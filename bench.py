@@ -112,29 +112,20 @@ def _sf(sf_dir: str) -> float:
 
 
 def frontier_throughput(spark, sf_dir: str) -> tuple[int, float]:
-    """The authoritative metric's sandbox slice: canonicalize → xxhash64 →
-    exact URL-seen dedup → per-host politeness quota ranking, over a
-    synthetic frontier derived from orders (4 URL variants per order, ~25%
-    canonical-duplicate rate). Returns (n_input_urls, seconds)."""
-    from pyspark.sql import Window
+    """The authoritative metric's sandbox slice, on the engine's own code
+    paths: canonicalize → xxhash64 → ``seen.dedup_in_batch`` →
+    ``politeness.schedule_wave`` (top 2,000 per host by order price), over
+    a synthetic frontier derived from orders (16 URL variants per order,
+    ~25% canonical-duplicate rate). Returns (n_input_urls, seconds)."""
     from pyspark.sql import functions as F
 
+    from price_crawler_spark.frontier.politeness import schedule_wave
+    from price_crawler_spark.frontier.seen import dedup_in_batch
     from price_crawler_spark.functions.urls import (
-        canonicalize_with_host,
         canonicalize_with_host_arrow,
         url_hash,
     )
-
-    # A/B seam (VERDICT r2 item 2b): 'expr' = the codegen regexp chain,
-    # 'arrow' = the pandas-UDF batch canonicalizer. Same output (pytest
-    # parity-gated). Measured head-to-head (19.2M URLs, best-of-3, same box):
-    # expr 407k/s @8c, 1.01M/s @32c; arrow 826k/s @8c, 1.92M/s @32c — the
-    # Arrow batch halves the canonicalize cost at BOTH widths, so it is the
-    # default; full table in BASELINE.md.
-    canon_impl = {
-        "expr": canonicalize_with_host,
-        "arrow": canonicalize_with_host_arrow,
-    }[os.environ.get("SPARK_GRAFT_CANON_IMPL", "arrow")]
+    from price_crawler_spark.schemas import ROBOTS_SCHEMA
 
     n_part = spark.sparkContext.defaultParallelism * 2
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -176,28 +167,21 @@ def frontier_throughput(spark, sf_dir: str) -> tuple[int, float]:
     )
     raw.cache()
     n_input = raw.count()  # materializes the input outside the timed window
+    robots = spark.createDataFrame([], ROBOTS_SCHEMA)
 
     t0 = time.time()
+    # priority = -price: the highest-priced copy of a URL wins the dedup,
+    # and each host's 2,000 highest-priced URLs win the schedule
     canon = (
-        raw.select(canon_impl("url").alias("c"), "o_totalprice")
-        .select("c.canonical_url", "c.host", "o_totalprice")
+        raw.select(canonicalize_with_host_arrow("url").alias("c"), "o_totalprice")
+        .select(
+            "c.canonical_url", "c.host", (-F.col("o_totalprice")).alias("priority")
+        )
         .withColumn("url_hash", url_hash("canonical_url"))
+        .withColumn("seq_key", F.col("url_hash"))
     )
-    # first-wins dedup as an aggregate (map-side partial combine — shuffles
-    # one candidate per (partition, url_hash), not every URL; a window would
-    # shuffle + sort the full frontier)
-    deduped = canon.groupBy("url_hash").agg(
-        F.max_by(
-            F.struct("canonical_url", "host", "o_totalprice"),
-            F.struct("o_totalprice", "canonical_url"),
-        ).alias("r")
-    ).select("url_hash", "r.canonical_url", "r.host", "r.o_totalprice")
-    w_host = Window.partitionBy("host").orderBy(
-        F.desc("o_totalprice"), F.asc("url_hash")
-    )
-    scheduled = (
-        deduped.withColumn("rank", F.row_number().over(w_host))
-        .filter(F.col("rank") <= 2000)
+    scheduled, _, _ = schedule_wave(
+        dedup_in_batch(canon, order_col="priority"), robots, wave_seconds=2000
     )
     _noop(scheduled)
     dt = time.time() - t0
@@ -249,10 +233,14 @@ def seen_path_throughput(spark, sf_dir: str) -> tuple[int, float]:
 
 def skew_compare(spark, sf_dir: str) -> dict:
     """C6: mega-host skew. 50% of a 2.4M-URL frontier lands on one host;
-    compare the naive per-host window rank against the salted two-phase
-    top-k (rank within (host, salt) first, final rank over survivors)."""
-    from pyspark.sql import Window
+    time ``schedule_wave`` without mega hosts (one task ranks the mega
+    host's whole backlog) against ``schedule_wave`` with the mega host
+    salted 16 ways (pre-rank per (host, salt), final rank over survivors),
+    and check both select the same rows."""
     from pyspark.sql import functions as F
+
+    from price_crawler_spark.frontier.politeness import schedule_wave
+    from price_crawler_spark.schemas import ROBOTS_SCHEMA
 
     n_part = spark.sparkContext.defaultParallelism * 2
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -265,33 +253,26 @@ def skew_compare(spark, sf_dir: str) -> dict:
         .select(
             host.alias("host"),
             F.xxhash64(o.cast("string"), F.col("v")).alias("url_hash"),
-            (o * 16 + F.col("v")).alias("priority"),
+            (-(o * 16 + F.col("v"))).alias("priority"),
         )
+        .withColumn("seq_key", F.col("url_hash"))
+        .withColumn("canonical_url", F.concat(
+            F.lit("https://"), F.col("host"), F.lit("/p/"), F.col("seq_key").cast("string"),
+        ))
         .repartition(n_part)
         .cache()
     )
     n = raw.count()
     K = 2000
     out = {"n_urls": n, "k_per_host": K}
+    robots = spark.createDataFrame([], ROBOTS_SCHEMA)
 
-    # naive: one task sorts the mega host's 1.2M rows
-    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_hash"))
-    naive = raw.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= K)
+    def _schedule(mega_hosts):
+        return schedule_wave(raw, robots, wave_seconds=K, mega_hosts=mega_hosts)[0]
+
+    naive = _schedule([])
     t0 = time.time(); _noop(naive); out["naive_sec"] = round(time.time() - t0, 3)
-
-    # salted two-phase: per-(host,salt) top-K (16-way for the mega host),
-    # then the exact final top-K over ≤16K survivors per host
-    salt = F.when(F.col("host") == "mega.example.com", F.pmod("url_hash", F.lit(16))).otherwise(F.lit(0))
-    w1 = Window.partitionBy("host", "salt").orderBy(F.desc("priority"), F.asc("url_hash"))
-    w2 = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_hash"))
-    salted = (
-        raw.withColumn("salt", salt)
-        .withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= K)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= K)
-        .drop("salt", "r1")
-    )
+    salted = _schedule(["mega.example.com"])
     t0 = time.time(); _noop(salted); out["salted_sec"] = round(time.time() - t0, 3)
 
     # equivalence: identical selected sets
@@ -307,7 +288,7 @@ def run_skew() -> None:
     spark = get_spark("bench-skew", cores=CPUS, shuffle_partitions=CPUS)
     skew_compare(spark, SF_DIR)  # warm-up
     out = skew_compare(spark, SF_DIR)
-    out["metric"] = "mega-host skew: naive window vs salted two-phase top-k"
+    out["metric"] = "mega-host skew: schedule_wave without vs with the mega host salted"
     out["sf"] = _sf(SF_DIR)
     out["cpus"] = CPUS
     print(json.dumps(out))

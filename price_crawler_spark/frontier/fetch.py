@@ -1,7 +1,7 @@
 """Fetch stage — vectorized per-host batches (SURVEY.md §2.1 S1-S2).
 
-``applyInPandas`` grouped by TRUE host: one Arrow batch per host per wave,
-processed in (priority, seq_key) order — the distributed analogue of the
+``applyInPandas`` grouped by ``host_salt``: one Arrow batch per host (per
+salt bucket of a mega host) per wave, processed in (priority, seq_key) order — the distributed analogue of the
 reference's per-host connection pool + inter-request delay
 (base_scraper.py:30-95). In production the body of ``_fetch_batch`` holds an
 HTTP session per group (UA rotation via ``pmod(xxhash64(url), n_ua)``,
@@ -158,12 +158,12 @@ def fetch_scheduled(
 ) -> DataFrame:
     """scheduled frontier rows -> rows + (ok, spans_json, links_json).
 
-    Grouped by ``host_salt`` when present (C6: a mega host's quota-selected
-    URLs spread over salt buckets, each bucket one Arrow batch), else by
-    true host. ``fail_hosts`` is a synthetic-transport harness knob: every
-    fetch for those hosts fails (persistent-failure drain audit)."""
+    Grouped by ``schedule_wave``'s ``host_salt`` key (C6: a mega host's
+    quota-selected URLs spread over salt buckets, each bucket one Arrow
+    batch; any other host is one group). ``fail_hosts`` is a
+    synthetic-transport harness knob: every fetch for those hosts fails
+    (persistent-failure drain audit)."""
     fail_set = frozenset(fail_hosts or ())
-    group_key = "host_salt" if "host_salt" in sched.columns else "host"
     keep = [c for c in sched.columns if c not in ("crawl_delay", "host_salt")]
     out_schema = T.StructType(
         [f for f in sched.schema.fields if f.name in keep] + _EXTRA_FIELDS
@@ -224,8 +224,7 @@ def fetch_scheduled(
         out["links_json"] = links_js
         return out
 
-    cols = keep if group_key in keep else [*keep, group_key]
-    return sched.select(*cols).groupBy(group_key).applyInPandas(
+    return sched.select(*keep, "host_salt").groupBy("host_salt").applyInPandas(
         _fetch_batch, out_schema
     )
 

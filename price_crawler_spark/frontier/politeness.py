@@ -3,13 +3,20 @@
 Per wave, each host may fetch at most ``floor(wave_seconds / crawl_delay)``
 URLs (the reference's REQUEST_DELAY=1 / README's ≥2 s guidance generalized
 to a per-host budget from the robots dimension). Selection within a host is
-a window-ranked priority queue:
+a window-ranked priority queue ordered by ``(priority, seq_key)`` on the
+TRUE host.
 
-    row_number() OVER (PARTITION BY host ORDER BY priority, seq_key)
-
-ranked on the TRUE host — salting for fetch-task distribution happens
-strictly downstream of quota assignment, so splitting a mega-host across
-partitions can never violate its crawl-delay (SURVEY §7.3 risk 6).
+One path ranks every wave (C6). Each row gets a salt — ``url_hash`` modulo
+``salt_buckets`` on a mega host, 0 elsewhere. A pre-rank within
+(host, salt) keeps ≤ quota rows per bucket, then the exact final rank per
+host runs over those survivors only, so no single task ever sorts a mega
+host's full backlog. Each bucket keeps its own top-quota, so the host's
+top-quota always survives the pre-rank: the selected set is the plain
+per-host rank at any bucket count, and with no mega host (salt 0) the
+pre-rank already is that rank. The same salt is the ``host_salt``
+fetch-group key on scheduled rows; quota is decided before it splits a
+mega host's fetches, so salting can never violate a crawl-delay
+(SURVEY §7.3 risk 6).
 
 The robots table is tiny (one row per host) → broadcast join; deny rules
 are prefix matches on the URL path evaluated with ``exists()`` over the
@@ -32,16 +39,10 @@ def schedule_wave(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Split pending frontier rows into (scheduled, deferred, blocked).
 
-    scheduled — fetch this wave (within the host's politeness quota)
+    scheduled — fetch this wave (within the host's politeness quota), with
+                its ``host_salt`` fetch-group key
     deferred  — stay pending for the next wave (over quota)
     blocked   — robots-denied (terminal status)
-
-    With ``mega_hosts``, ranking runs in two phases (C6): a pre-rank within
-    (host, salt) keeps ≤ quota rows per salt bucket, then the exact final
-    rank runs over that ≤ quota×buckets survivor set — so no single task
-    ever sorts a mega host's full backlog. The selected set is identical to
-    the single-phase rank (the final rank is exact); only the deferred set's
-    ordering work is reduced. Measured 3.2× at 50% skew (bench.py --skew).
     """
     joined = pending.join(F.broadcast(robots), "host", "left").withColumn(
         "crawl_delay", F.coalesce(F.col("crawl_delay"), F.lit(default_crawl_delay))
@@ -71,60 +72,31 @@ def schedule_wave(
         .withColumn("status", F.lit("blocked"))
         .drop("allow", "deny", "crawl_delay", "_denied")
     )
-    allowed = joined.filter(~F.col("_denied"))
+    allowed = joined.filter(~F.col("_denied")).drop("allow", "deny", "_denied")
 
-    w = Window.partitionBy("host").orderBy("priority", "seq_key")
     quota = F.greatest(
         F.floor(F.lit(float(wave_seconds)) / F.col("crawl_delay")), F.lit(1)
     )
-
-    if mega_hosts:
-        salt = F.when(
-            F.col("host").isin(mega_hosts),
-            F.pmod(F.col("url_hash"), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0))
-        w1 = Window.partitionBy("host", "_salt").orderBy("priority", "seq_key")
-        pre = (
-            allowed.withColumn("_salt", salt)
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= quota)
-            .drop("_salt", "_r1")
-        )
-        ranked = pre.withColumn("_rank", F.row_number().over(w)).withColumn(
-            "_quota", quota
-        )
-        scheduled = ranked.filter(F.col("_rank") <= F.col("_quota")).drop(
-            "allow", "deny", "_denied", "_rank", "_quota"
-        )
-        # deferred = everything allowed but not selected (url_hash is unique
-        # within a deduped wave); broadcast anti-join against the small
-        # scheduled set instead of ranking the mega host's full backlog
-        deferred = allowed.join(
-            scheduled.select("url_hash"), "url_hash", "left_anti"
-        ).drop("allow", "deny", "crawl_delay", "_denied")
-        return scheduled, deferred, blocked
-
-    ranked = allowed.withColumn("_rank", F.row_number().over(w)).withColumn(
-        "_quota", quota
-    )
-    scheduled = ranked.filter(F.col("_rank") <= F.col("_quota")).drop(
-        "allow", "deny", "_denied", "_rank", "_quota"
-    )
-    deferred = ranked.filter(F.col("_rank") > F.col("_quota")).drop(
-        "allow", "deny", "crawl_delay", "_denied", "_rank", "_quota"
-    )
-    return scheduled, deferred, blocked
-
-
-def with_host_salt(df: DataFrame, mega_hosts: list[str], buckets: int = 16) -> DataFrame:
-    """Skew salt (C6): split mega-host rows across ``buckets`` fetch groups.
-
-    Applied AFTER quota ranking; combined with AQE skew-join splitting
-    (spark.sql.adaptive.skewJoin.enabled, on in the session factory).
-    """
     salt = F.when(
-        F.col("host").isin(mega_hosts), F.pmod(F.col("url_hash"), F.lit(buckets))
+        F.col("host").isin(mega_hosts or []),
+        F.pmod(F.col("url_hash"), F.lit(salt_buckets)),
     ).otherwise(F.lit(0))
-    return df.withColumn(
-        "host_salt", F.concat_ws("#", F.col("host"), salt.cast("string"))
+    by_salt = Window.partitionBy("host_salt").orderBy("priority", "seq_key")
+    by_host = Window.partitionBy("host").orderBy("priority", "seq_key")
+    scheduled = (
+        allowed.withColumn(
+            "host_salt", F.concat_ws("#", F.col("host"), salt.cast("string"))
+        )
+        .withColumn("_rank", F.row_number().over(by_salt))
+        .filter(F.col("_rank") <= quota)
+        .withColumn("_rank", F.row_number().over(by_host))
+        .filter(F.col("_rank") <= quota)
+        .drop("_rank")
     )
+    # deferred = everything allowed but not selected (url_hash is unique in
+    # pending); an anti-join against the small scheduled set instead of
+    # ranking the full backlog
+    deferred = allowed.join(
+        scheduled.select("url_hash"), "url_hash", "left_anti"
+    ).drop("crawl_delay")
+    return scheduled, deferred, blocked

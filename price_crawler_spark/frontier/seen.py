@@ -212,8 +212,15 @@ class ShardedCuckoo:
             for h in left["url_hash"].sort_values():
                 if delete:
                     shard.delete(int(h))
-                else:
-                    shard.insert(int(h))
+                elif not shard.insert(int(h)):
+                    # a failed eviction walk has already displaced an
+                    # earlier fingerprint: continuing would leave false
+                    # negatives (silent re-fetch), so the commit must fail
+                    raise RuntimeError(
+                        f"cuckoo shard {int(key[0])} saturated "
+                        f"({nb} buckets x {sl} slots); raise n_shards or "
+                        "n_buckets"
+                    )
             return pd.DataFrame(
                 {"shard": [int(key[0])], "bits": [shard.to_bytes()]}
             )

@@ -193,9 +193,6 @@ class CrawlRun:
             pending, self.robots, self.wave_seconds,
             mega_hosts=self.mega_hosts, salt_buckets=self.salt_buckets,
         )
-        sched = politeness.with_host_salt(
-            sched, self.mega_hosts, buckets=self.salt_buckets
-        )
 
         # persist AND materialize: the commit's five table writes run
         # concurrently, and concurrent jobs hitting a cold cache each

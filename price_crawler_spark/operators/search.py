@@ -249,7 +249,7 @@ class QueryCache:
         rows = (
             self._table()
             .filter(
-                (F.col("query_hash") == F.md5(F.lower(F.lit(query))))
+                (F.col("query_hash") == self.key_col(F.lit(query)))
                 & (F.col("expires_at") > F.lit(now))
             )
             .orderBy(F.desc("created_at"))
@@ -260,17 +260,18 @@ class QueryCache:
 
     def set(self, query: str, payload: str, now) -> None:
         import datetime
-        import hashlib
 
         expires = now + datetime.timedelta(minutes=self.ttl_minutes)
-        qh = hashlib.md5(query.lower().encode()).hexdigest()
+        key = self.key_col(F.lit(query))
+        # the placeholder hash is replaced by key_col, the one cache-key
+        # expression get() and the overwrite filter also use
         new = self.spark.createDataFrame(
-            [(qh, payload, now, expires)], self._schema
-        )
+            [("", payload, now, expires)], self._schema
+        ).withColumn("query_hash", key)
         merged = (
             self._table()
-            .filter(F.col("query_hash") != F.md5(F.lower(F.lit(query))))
-            .unionByName(new.select(*[f.name for f in self._schema.fields]))
+            .filter(F.col("query_hash") != key)
+            .unionByName(new)
             .filter(F.col("expires_at") > F.lit(now))  # expired cleanup
         )
         # capacity eviction: keep newest max_size (cache.py:36-44).

@@ -75,20 +75,3 @@ def get_spark(
             builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver parquet tables; returns a dict name -> DataFrame."""
-    if not names:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

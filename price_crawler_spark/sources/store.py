@@ -110,12 +110,3 @@ class SnapshotStore:
         paths = [os.path.join(self.root, p) for p in cur["tables"][name]]
         return spark.read.parquet(*paths)
 
-    def rollback(self, snap_id: int) -> None:
-        manifest = self._read_manifest()
-        manifest["snapshots"] = [
-            s for s in manifest["snapshots"] if s["id"] <= snap_id
-        ]
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path)

@@ -369,9 +369,14 @@ Disallow: /
     assert sched[0].crawl_delay == 2.5
 
 
-def test_two_phase_schedule_equals_single_phase(spark):
-    """C6: salted two-phase scheduling selects the IDENTICAL set as the
-    naive per-host rank, and defers everything else."""
+@pytest.mark.parametrize("salt_buckets", [16, 64])
+@pytest.mark.parametrize(
+    "mega_hosts", [None, ["mega.example.com"]], ids=["no_mega", "mega"]
+)
+def test_schedule_wave_matches_per_host_top_quota(spark, mega_hosts, salt_buckets):
+    """C6: with or without a salted mega host, at any bucket count,
+    schedule_wave selects exactly each host's top-quota rows by
+    (priority, seq_key) — the oracle crawler's rule — and defers the rest."""
     import random
 
     from price_crawler_spark.frontier.politeness import schedule_wave
@@ -391,17 +396,50 @@ def test_two_phase_schedule_equals_single_phase(spark):
         "store string, priority int, attempts int, wave int, status string, "
         "seq_key long",
     )
+    delays = {"mega.example.com": 1.0, "s3.example.com": 2.5}
     robots = spark.createDataFrame(
-        [("mega.example.com", None, None, 1.0)], ROBOTS_SCHEMA
+        [(h, None, None, d) for h, d in delays.items()], ROBOTS_SCHEMA
     )
-    s1, d1, _ = schedule_wave(pending, robots, wave_seconds=10)
-    s2, d2, _ = schedule_wave(
-        pending, robots, wave_seconds=10, mega_hosts=["mega.example.com"]
+    wave_seconds = 10
+    sched, deferred, _ = schedule_wave(
+        pending, robots, wave_seconds=wave_seconds, mega_hosts=mega_hosts,
+        salt_buckets=salt_buckets,
     )
-    sel1 = sorted(r.url for r in s1.collect())
-    sel2 = sorted(r.url for r in s2.collect())
-    assert sel1 == sel2 and len(sel1) > 0
-    assert sorted(r.url for r in d1.collect()) == sorted(r.url for r in d2.collect())
+
+    by_host: dict[str, list] = {}
+    for r in rows:
+        by_host.setdefault(r[3], []).append(r)
+    want_sel = set()
+    for host, hrows in by_host.items():
+        quota = max(1, int(wave_seconds // delays.get(host, 1.0)))
+        top = sorted(hrows, key=lambda r: (r[5], r[9]))[:quota]
+        want_sel |= {r[0] for r in top}
+    got_sel = [r.url for r in sched.collect()]
+    assert len(got_sel) == len(set(got_sel))
+    assert set(got_sel) == want_sel
+    assert sorted(r.url for r in deferred.collect()) == sorted(
+        {r[0] for r in rows} - want_sel
+    )
+
+
+def test_sharded_cuckoo_saturation_raises(spark):
+    """Under capacity every inserted hash probes maybe_seen (checked against
+    a Python set of what was inserted). Past capacity the table build must
+    fail: a failed eviction walk has already displaced an earlier
+    fingerprint, so carrying on would leave false negatives."""
+    from price_crawler_spark.frontier.seen import ShardedCuckoo
+
+    ck = ShardedCuckoo(n_shards=1, n_buckets=1 << 4, slots=4)  # 64 slots
+    inserted = spark.range(0, 40).select(F.xxhash64("id").alias("url_hash"))
+    want = {r.url_hash for r in inserted.collect()}
+    cand = spark.range(0, 100).select(F.xxhash64("id").alias("url_hash"))
+    probed = ck.probe(ck.with_keys(cand), ck.insert(inserted, None)).collect()
+    assert len(probed) == 100
+    assert want <= {r.url_hash for r in probed if r.maybe_seen}
+
+    too_many = spark.range(0, 200).select(F.xxhash64("id").alias("url_hash"))
+    with pytest.raises(Exception, match="cuckoo shard 0 saturated"):
+        ck.insert(too_many, None).collect()
 
 
 def test_sharded_cuckoo_insert_delete_probe(spark):

@@ -14,11 +14,7 @@ from price_crawler_spark.plans import (
     assert_wholestage_codegen,
     explain_str,
 )
-from price_crawler_spark.plans.partitioning import (
-    N_SEEN_SHARDS,
-    salted_fetch_key,
-    seen_shard,
-)
+from price_crawler_spark.plans.partitioning import N_SEEN_SHARDS, seen_shard
 
 SF = "/root/testdata/sf0.001"
 
@@ -139,15 +135,27 @@ def test_seen_shard_is_parallelism_independent(spark):
         assert rows_re[i] == s
 
 
-def test_salted_fetch_key_only_splits_mega_hosts(spark):
-    df = spark.createDataFrame(
-        [("big.com", i) for i in range(100)] + [("small.com", i) for i in range(100)],
-        ["host", "h"],
-    ).select("host", salted_fetch_key("host", F.col("h").cast("long"), ["big.com"], 4).alias("k"))
-    keys = df.groupBy("host").agg(F.countDistinct("k").alias("n")).collect()
-    by_host = {r.host: r.n for r in keys}
+def test_host_salt_only_splits_mega_hosts(spark):
+    """schedule_wave's host_salt fetch-group key: the mega host spreads over
+    at most salt_buckets keys, every other host keeps exactly one."""
+    from price_crawler_spark.frontier.politeness import schedule_wave
+    from price_crawler_spark.schemas import ROBOTS_SCHEMA
+
+    pending = spark.createDataFrame(
+        [(h, f"https://{h}/p/{i}", i, 0, i) for h in ("big.com", "small.com")
+         for i in range(100)],
+        "host string, canonical_url string, url_hash long, priority int, "
+        "seq_key long",
+    )
+    robots = spark.createDataFrame([], ROBOTS_SCHEMA)
+    sched, _, _ = schedule_wave(
+        pending, robots, wave_seconds=1000, mega_hosts=["big.com"],
+        salt_buckets=4,
+    )
+    keys = sched.groupBy("host").agg(F.countDistinct("host_salt").alias("n"))
+    by_host = {r.host: r.n for r in keys.collect()}
     assert by_host["small.com"] == 1
-    assert by_host["big.com"] == 4
+    assert 1 < by_host["big.com"] <= 4
 
 
 def test_scan_guard_repartitions_narrow_file_scan_without_rdd_probe(spark):
@@ -176,3 +184,25 @@ def test_scan_guard_repartitions_narrow_file_scan_without_rdd_probe(spark):
     assert _size_to_bytes("1g") == 1 << 30
     assert _size_to_bytes("512kb") == 512 << 10
     assert _size_to_bytes("64b") == 64
+
+
+def test_scan_guard_counts_unstatable_files_as_full_bins(spark, tmp_path, monkeypatch):
+    """A file whose size cannot be read counts as a full maxPartitionBytes
+    bin, so a scan of >= defaultParallelism such files is left unchanged
+    (counting them as 0 bytes would pack them into a few bins and add a
+    shuffle over a likely-wide remote scan)."""
+    import os
+
+    from price_crawler_spark.plans.partitioning import ensure_scan_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "many")
+    spark.range(0, 10 * target).repartition(target).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) >= target
+
+    def _unreadable(_p):
+        raise OSError("size unavailable")
+
+    monkeypatch.setattr(os.path, "getsize", _unreadable)
+    assert ensure_scan_parallelism(df) is df

@@ -186,6 +186,8 @@ def test_query_cache(spark, tmp_path):
     qc.set("RTX 4090", '{"hits": 1}', t0)
     assert qc.get("RTX 4090", t0) == '{"hits": 1}'
     assert qc.get("rtx 4090", t0) == '{"hits": 1}'  # md5(lower(q)) key
+    qc.set("顯示卡 ÄÖ", '{"hits": 2}', t0)  # non-ASCII key round trip
+    assert qc.get("顯示卡 äö", t0) == '{"hits": 2}'
     # TTL expiry
     t1 = t0 + datetime.timedelta(minutes=31)
     assert qc.get("RTX 4090", t1) is None

@@ -1,15 +1,18 @@
 """Stage-level decomposition of the scaling job at two parallelism levels.
 
-Runs the identical frontier canonicalize+dedup+schedule job (the --scaling
-job from bench.py) with the Spark event log on, then aggregates per-stage
-task metrics: wall time (stage submit -> completion), summed executor run
+Runs ``bench.frontier_throughput`` (the --scaling job: canonicalize, then
+the engine's dedup_in_batch + schedule_wave) with the Spark event log on,
+then aggregates per-stage task metrics: wall time (stage submit -> completion), summed executor run
 time, GC, shuffle bytes, python-UDF time. The point is to ATTRIBUTE the
 non-scaling seconds: a stage whose wall time doesn't shrink 8->32 while its
 summed run time stays flat is a granularity/straggler problem; one whose
 summed run time GROWS at 32 cores is a contention (memory-bandwidth / GC)
 problem.
 
-Usage: PYTHONPATH=/root/repo python tools/profile_scaling.py [cpus ...]
+Input size follows bench.py's env (``SPARK_GRAFT_SF_DIR``,
+``SPARK_GRAFT_URL_VARIANTS``, default 128 here).
+
+Usage: PYTHONPATH=. python tools/profile_scaling.py [cpus ...]
 """
 
 from __future__ import annotations
@@ -21,13 +24,8 @@ import sys
 import time
 
 
-def run_once(cpus: int, variants: int = int(os.environ.get("SPARK_GRAFT_URL_VARIANTS", "128"))) -> dict:
-    from pyspark.sql import Window, functions as F
-
-    from price_crawler_spark.functions.urls import (
-        canonicalize_with_host_arrow,
-        url_hash,
-    )
+def run_once(cpus: int) -> dict:
+    import bench
     from price_crawler_spark.session import get_spark
 
     evdir = f"/tmp/spark-events-{cpus}"
@@ -44,70 +42,15 @@ def run_once(cpus: int, variants: int = int(os.environ.get("SPARK_GRAFT_URL_VARI
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-    n_part = spark.sparkContext.defaultParallelism * 2
-    orders = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
-    o = F.col("o_orderkey")
-    var_arr = F.array(
-        *[
-            F.concat(
-                F.lit("?a=1&utm_source=v"),
-                F.lit(str(i)),
-                F.lit("&b="),
-                F.lit(str(i % 4)),
-            )
-            for i in range(variants)
-        ]
-    )
-    raw = (
-        orders.select(o, "o_custkey", "o_totalprice", F.explode(var_arr).alias("suffix"))
-        .select(
-            F.concat(
-                F.lit("https://Shop"),
-                (F.col("o_custkey") % 64).cast("string"),
-                F.lit(".example.com/item/"),
-                (o % 10000).cast("string"),
-                F.col("suffix"),
-            ).alias("url"),
-            o.alias("parent_page"),
-            "o_totalprice",
-        )
-        .repartition(n_part, F.col("parent_page"))
-        .drop("parent_page")
-    )
-    raw.cache()
-    raw.count()
-    canon = (
-        raw.select(canonicalize_with_host_arrow("url").alias("c"), "o_totalprice")
-        .select("c.canonical_url", "c.host", "o_totalprice")
-        .withColumn("url_hash", url_hash("canonical_url"))
-    )
-    deduped = (
-        canon.groupBy("url_hash")
-        .agg(
-            F.max_by(
-                F.struct("canonical_url", "host", "o_totalprice"),
-                F.struct("o_totalprice", "canonical_url"),
-            ).alias("r")
-        )
-        .select("url_hash", "r.canonical_url", "r.host", "r.o_totalprice")
-    )
-    w_host = Window.partitionBy("host").orderBy(F.desc("o_totalprice"), F.asc("url_hash"))
-    sched = (
-        deduped.withColumn("rank", F.row_number().over(w_host))
-        .filter(F.col("rank") <= 2000)
-    )
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    noop(sched)  # warm-up (codegen + python workers)
-    t0 = time.time()
-    noop(sched)
-    wall = time.time() - t0
+    bench.frontier_throughput(spark, bench.SF_DIR)  # warm-up (codegen + python workers)
+    _, wall = bench.frontier_throughput(spark, bench.SF_DIR)
+    # stages of the timed window only (the input materialization before it
+    # is excluded, like the bench's own timing)
+    t_min = time.time() - wall
     spark.stop()
     time.sleep(2)
 
-    stages = aggregate_event_log(evdir, t0)
+    stages = aggregate_event_log(evdir, t_min)
     return {"cpus": cpus, "wall_s": round(wall, 2), "stages": stages}
 
 
@@ -198,6 +141,7 @@ def aggregate_event_log(evdir: str, t_min: float) -> list[dict]:
 
 
 if __name__ == "__main__":
+    os.environ.setdefault("SPARK_GRAFT_URL_VARIANTS", "128")
     cpus_list = [int(a) for a in sys.argv[1:]] or [32, 8]
     for c in cpus_list:
         r = run_once(c)
