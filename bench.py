@@ -227,7 +227,7 @@ def seen_path_throughput(spark, sf_dir: str) -> tuple[int, float]:
     updated = bloomer.insert(new.select("url_hash"), bloom_table)
     _noop(updated)
     dt = time.time() - t0
-    cand.unpersist(); seen.unpersist(); bloom_table.unpersist()
+    new.unpersist(); cand.unpersist(); seen.unpersist(); bloom_table.unpersist()
     return n, dt
 
 

@@ -12,10 +12,14 @@ default downstream.
 Parsing runs driver-side over one tiny text per host (robots.txt is
 KB-sized and one-per-host — there is nothing to distribute); the OUTPUT is
 the broadcast dim joined against the frontier, which is where scale lives.
+The dim is built from a pandas frame, so it is an Arrow-backed local
+relation that lives in the JVM: no job to build it and no Python worker
+each time a wave's plan scans it.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from price_crawler_spark.schemas import ROBOTS_SCHEMA
@@ -76,12 +80,21 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
     }
 
 
+def robots_table(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Rows of {host, allow, deny, crawl_delay} → the robots dimension with
+    ``ROBOTS_SCHEMA``; a missing key is null (no rules, default delay)."""
+    pdf = pd.DataFrame(
+        {f.name: [r.get(f.name) for r in rows] for f in ROBOTS_SCHEMA.fields}
+    )
+    return spark.createDataFrame(pdf, ROBOTS_SCHEMA)
+
+
 def robots_dim(
     spark: SparkSession, fetched: dict[str, str], agent: str = "*"
 ) -> DataFrame:
     """{host: robots.txt body} → the broadcast robots dimension table."""
-    rows = []
-    for host, body in sorted(fetched.items()):
-        r = parse_robots_txt(body, agent)
-        rows.append((host, r["allow"], r["deny"], r["crawl_delay"]))
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return robots_table(
+        spark,
+        [{"host": host, **parse_robots_txt(body, agent)}
+         for host, body in sorted(fetched.items())],
+    )

@@ -158,17 +158,37 @@ def filter_new(
     bloom_table: DataFrame | None,
     bloom: ShardedBloom,
 ) -> DataFrame:
-    """Exact new-URL set: bloom prefilter + anti-join residue (layer 2+3)."""
-    probed = bloom.probe(cand, bloom_table)
-    definite_new = probed.filter(~F.col("maybe_seen"))
-    maybe = probed.filter(F.col("maybe_seen"))
-    if seen is None:
-        survivors = maybe
-    else:
-        survivors = maybe.join(
-            seen.select("url_hash"), "url_hash", "left_anti"
+    """Exact new-URL set: bloom prefilter + anti-join residue (layer 2+3).
+
+    The set comes back persisted and materialized; the caller unpersists
+    it. The probe output feeds both halves of the union, so it is
+    persisted for the duration of the build: everything upstream of the
+    probe (the caller's Python stages included) and the probe cogroup
+    itself run once, not once per half."""
+    probed = bloom.probe(cand, bloom_table).persist()
+    new = None
+    try:
+        definite_new = probed.filter(~F.col("maybe_seen"))
+        maybe = probed.filter(F.col("maybe_seen"))
+        if seen is None:
+            survivors = maybe
+        else:
+            survivors = maybe.join(
+                seen.select("url_hash"), "url_hash", "left_anti"
+            )
+        new = (
+            definite_new.unionByName(survivors)
+            .drop("maybe_seen", "h2", "shard")
+            .persist()
         )
-    return definite_new.unionByName(survivors).drop("maybe_seen", "h2", "shard")
+        new.count()
+    except BaseException:
+        if new is not None:
+            new.unpersist()
+        raise
+    finally:
+        probed.unpersist()
+    return new
 
 
 class ShardedCuckoo:
@@ -256,7 +276,7 @@ class ShardedCuckoo:
                 out["maybe_seen"] = False
                 return out
             shard = CuckooShard.from_bytes(raw, nb, sl)
-            out["maybe_seen"] = [shard.contains(int(h)) for h in left["url_hash"]]
+            out["maybe_seen"] = shard.contains_many(left["url_hash"].to_numpy())
             return out
 
         cand = self.with_keys(cand) if "shard" not in cand.columns else cand
@@ -331,6 +351,16 @@ class CuckooShard:
         i1 = self._i1(h)
         i2 = self._i2(i1, fp)
         return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
+
+    def contains_many(self, h: np.ndarray) -> np.ndarray:
+        """Vectorized :meth:`contains` over an int64 array of hashes."""
+        h = np.asarray(h, dtype=np.int64)
+        fp = (h >> 16) & 0xFFFF
+        fp[fp == 0] = 1
+        i1 = h & (self.n_buckets - 1)
+        i2 = (i1 ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
+        fp = fp.astype(np.uint16)[:, None]
+        return (self.table[i1] == fp).any(1) | (self.table[i2] == fp).any(1)
 
     def delete(self, h: int) -> bool:
         fp = self._fp(h)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,6 +29,7 @@ from price_crawler_spark.frontier.fetch import (
     fetch_scheduled,
     links_from_fetched,
 )
+from price_crawler_spark.frontier.robots import robots_table
 from price_crawler_spark.frontier.seen import (
     ShardedBloom,
     dedup_in_batch,
@@ -100,14 +102,16 @@ class CrawlRun:
         # task count, not bucket count, is what removes the straggler.
         # Goldens keep the default.
         self.salt_buckets = salt_buckets
-        self.robots = spark.createDataFrame(robots or robots_rows())
+        self.robots = robots_table(spark, robots or robots_rows())
         self.mega_hosts = mega_hosts or ["www.coolpc.com.tw"]
-        # driver-step wall seconds, accumulated across waves. The wave loop
-        # has exactly four blocking driver actions (everything between them
-        # is lazy plan building), so these four cover the whole wave wall:
-        # pending_probe | fetch (politeness+schedule+fetch UDF, materialized
-        # by fetched.count) | children (canonicalize+bloom+seen, by
-        # new_children.count) | commit (the concurrent snapshot writes).
+        # driver-step wall seconds, accumulated across waves. Each phase
+        # times the blocking work of one wave step, and what runs between
+        # phases is lazy plan building, so the four phases cover the whole
+        # wave wall: pending_probe (pending.count) | fetch
+        # (politeness+schedule+fetch UDF, materialized by fetched.count) |
+        # children_seen (canonicalize+bloom+seen; filter_new materializes
+        # the probe and the new set itself) | commit (the concurrent
+        # snapshot writes).
         # Used by tools/profile_wave.py; event-log stage names can't
         # attribute these (the commit's concurrent writes all surface as
         # anonymous CompletableFuture callsites).
@@ -230,19 +234,15 @@ class CrawlRun:
         children = dedup_in_batch(children)
         seen = self.store.read(self.spark, "seen")
         bloom_table = self.store.read(self.spark, "bloom")
-        # Persist + materialize ONCE: three of the commit's concurrent table
-        # writes (pending replace, seen append, bloom replace) consume
-        # new_children, and without a persist each would recompute the whole
-        # child pipeline — Arrow canonicalize + Bloom-probe cogroup + exact
-        # anti-join — tripling commit cost (measured: the commit dominated
-        # wave wall time and scaled NEGATIVELY with cores before this).
-        new_children = (
-            filter_new(children, seen, bloom_table, self.bloom)
-            .select(*FRONTIER_COLS)
-            .persist()
-        )
+        # filter_new returns its set persisted and materialized: three of
+        # the commit's concurrent table writes (pending replace, seen
+        # append, bloom replace) consume new_children, and without the
+        # persist each would recompute the whole child pipeline — Arrow
+        # canonicalize + Bloom-probe cogroup + exact anti-join — tripling
+        # commit cost (measured: the commit dominated wave wall time and
+        # scaled NEGATIVELY with cores before this).
         t0 = time.time()
-        new_children.count()
+        new_children = filter_new(children, seen, bloom_table, self.bloom)
         self._phase("children_seen", t0)
 
         done_ok = ok.select(*[c for c in FRONTIER_COLS if c != "status"]).withColumn(
@@ -353,8 +353,11 @@ class CrawlRun:
         log = self.store.read(spark, "frontier_log")
         if log is None or not urls:
             return 0
+        # a pandas-built (Arrow-backed local) relation: the scans below run
+        # on the JVM, where a row list would be a PythonRDD scanned by
+        # Python workers each time
         hashes = (
-            spark.createDataFrame([(u,) for u in urls], "url string")
+            spark.createDataFrame(pd.DataFrame({"url": urls}), "url string")
             .select(canonicalize_with_host("url").alias("c"))
             .select(url_hash(F.col("c.canonical_url")).alias("url_hash"))
             .distinct()
@@ -373,11 +376,7 @@ class CrawlRun:
         filt = self.store.read(spark, "bloom")
         seen_rest = seen.join(hit_hashes, "url_hash", "left_anti")
         filt_deleted = self.bloom.delete(hit_hashes, filt)
-        re_new = (
-            filter_new(re_rows, seen_rest, filt_deleted, self.bloom)
-            .select(*FRONTIER_COLS)
-            .persist()
-        )
+        re_new = filter_new(re_rows, seen_rest, filt_deleted, self.bloom)
         n = re_new.count()
         pending = self.store.read(spark, "pending")
         new_pending = (

@@ -208,11 +208,39 @@ def test_filter_new_is_exact(spark):
     )
     new = filter_new(cand, old, table, bloom)
     got = {r[0] for r in new.select("url_hash").collect()}
+    new.unpersist()
     expected = {
         r[0]
         for r in spark.range(300, 600).select(F.xxhash64("id")).collect()
     }
     assert got == expected
+
+
+def test_filter_new_probes_once(spark):
+    """filter_new evaluates the probe (and everything upstream of it) once:
+    a probe that adds each row it emits to an accumulator has counted every
+    candidate exactly once after the new set is built and counted."""
+    acc = spark.sparkContext.accumulator(0)
+
+    class CountingBloom(ShardedBloom):
+        def probe(self, cand, table):
+            def count_rows(batches):
+                for pdf in batches:
+                    acc.add(len(pdf))
+                    yield pdf
+
+            out = super().probe(cand, table)
+            return out.mapInPandas(count_rows, out.schema)
+
+    bloom = CountingBloom(n_shards=4, bits_per_shard=1 << 8)
+    old = spark.range(0, 300).select(F.xxhash64("id").alias("url_hash"))
+    cand = spark.range(200, 600).select(
+        F.xxhash64("id").alias("url_hash"), F.lpad(F.hex("id"), 8, "0").alias("seq_key")
+    )
+    new = filter_new(cand, old, bloom.insert(old, None), bloom)
+    assert new.count() == 300
+    new.unpersist()
+    assert acc.value == 400
 
 
 def test_dedup_in_batch_first_wins(spark):
@@ -236,6 +264,44 @@ def test_cuckoo_insert_contains_delete():
     for h in hs[:500]:
         assert c.insert(h)
     assert all(c.contains(h) for h in hs)
+
+
+def test_cuckoo_contains_many_matches_contains(spark):
+    """The vectorized probe answers exactly as per-row ``contains`` over
+    random int64 hashes, negative ones and ones whose 16-bit fingerprint
+    is 0 included, both on a shard and through ``ShardedCuckoo.probe``."""
+    import numpy as np
+
+    from price_crawler_spark.frontier.seen import ShardedCuckoo
+
+    rng = np.random.default_rng(7)
+    info = np.iinfo(np.int64)
+    inserted = rng.integers(info.min, info.max, size=3000, dtype=np.int64)
+    others = rng.integers(info.min, info.max, size=5000, dtype=np.int64)
+    inserted[:300] &= ~np.int64(0xFFFF0000)  # fingerprint bits all 0
+    others[:300] &= ~np.int64(0xFFFF0000)
+    hashes = np.concatenate([inserted, others])
+    assert (hashes < 0).any() and (((hashes >> 16) & 0xFFFF) == 0).sum() >= 600
+
+    shard = CuckooShard(n_buckets=1 << 10)
+    for h in inserted:
+        assert shard.insert(int(h))
+    want = [shard.contains(int(h)) for h in hashes]
+    assert shard.contains_many(hashes).tolist() == want
+    assert all(want[: len(inserted)])
+
+    ck = ShardedCuckoo(n_shards=1, n_buckets=1 << 10)
+    table = ck.insert(
+        spark.createDataFrame([(int(h),) for h in inserted], "url_hash long"),
+        None,
+    )
+    # the sharded build inserts in sorted order, so decode its own bytes
+    built = CuckooShard.from_bytes(table.first().bits, n_buckets=1 << 10)
+    df = spark.createDataFrame([(int(h),) for h in hashes], "url_hash long")
+    got = {r.url_hash: r.maybe_seen for r in ck.probe(df, table).collect()}
+    assert [got[int(h)] for h in hashes] == [
+        built.contains(int(h)) for h in hashes
+    ]
 
 
 def test_cuckoo_serialization_roundtrip():
@@ -367,6 +433,69 @@ Disallow: /
     # u3 survives: Allow /private/ok (longer match) overrides Disallow /private
     assert [r.url for r in sched] == ["u2", "u3"]
     assert sched[0].crawl_delay == 2.5
+
+
+def test_crawl_run_robots_is_a_jvm_relation(spark, tmp_path):
+    """The robots dimension is an Arrow-backed local relation: scanning it
+    runs no Python worker (a PythonRDD would run one per scan, per wave)."""
+    run = CrawlRun(spark, str(tmp_path), QUERIES)
+    plan = run.robots._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+
+
+def test_robots_table_null_rules_schedule_as_before(spark):
+    """Rows with crawl_delay=None, an empty deny and a missing or None
+    allow schedule, defer and block the same rows through ``robots_table``
+    as through the row-list DataFrame it replaced."""
+    from price_crawler_spark.frontier.politeness import schedule_wave
+    from price_crawler_spark.frontier.robots import robots_table
+    from price_crawler_spark.schemas import ROBOTS_SCHEMA
+
+    robots = [
+        {"host": "a.example.com", "deny": [], "crawl_delay": None},
+        {"host": "b.example.com", "allow": None, "deny": [], "crawl_delay": None},
+        {"host": "c.example.com", "allow": ["/p/1"], "deny": ["/p"],
+         "crawl_delay": 2.5},
+    ]
+    hosts = [f"{c}.example.com" for c in "abcd"]
+    pending = spark.createDataFrame(
+        [
+            (f"u{i}", f"https://{hosts[i % 4]}/p/{i}", i, hosts[i % 4], "s",
+             i % 3, 0, 0, "pending", i)
+            for i in range(60)
+        ],
+        "url string, canonical_url string, url_hash long, host string, "
+        "store string, priority int, attempts int, wave int, status string, "
+        "seq_key long",
+    )
+    old = spark.createDataFrame(
+        [
+            (r["host"], r.get("allow"), r.get("deny"), r.get("crawl_delay"))
+            for r in robots
+        ],
+        ROBOTS_SCHEMA,
+    )
+    new = robots_table(spark, robots)
+    assert new.schema == ROBOTS_SCHEMA
+    assert sorted(new.collect()) == sorted(old.collect())
+
+    def sets(dim):
+        return [
+            sorted(r.url for r in part.collect())
+            for part in schedule_wave(pending, dim, wave_seconds=5)
+        ]
+
+    got = sets(new)
+    assert got == sets(old)
+    sched, deferred, blocked = got
+    # default delay 1 s → quota 5 on a/b/d; c: 2.5 s → quota 2, and only
+    # its /p/1… paths escape the /p Disallow
+    assert len(sched) == 5 + 5 + 5 + 2
+    assert blocked == sorted(
+        f"u{i}" for i in range(2, 60, 4) if not str(i).startswith("1")
+    )
+    assert len(sched) + len(deferred) + len(blocked) == 60
 
 
 @pytest.mark.parametrize("salt_buckets", [16, 64])
@@ -615,6 +744,23 @@ def test_cuckoo_crawl_invalidate_refetch_cycle(spark, tmp_path_factory, oracle):
     assert run.frontier().filter("status = 'pending'").count() == 0
     # a second invalidate of a never-fetched URL is a no-op
     assert run.invalidate(["https://nowhere.example.com/x"]) == 0
+
+
+def test_waves_and_invalidate_leave_no_cached_data(spark, tmp_path):
+    """Every DataFrame a wave or invalidate() persists (the fetch output,
+    filter_new's probe output and new set) is unpersisted before it
+    returns: the session's cache is empty afterwards."""
+    spark.catalog.clearCache()
+    run = CrawlRun(
+        spark, str(tmp_path), QUERIES, wave_seconds=WAVE_SECONDS,
+        seen_filter="cuckoo",
+    )
+    assert run.run_wave() and run.run_wave()
+    url = (
+        run.frontier().filter("status = 'fetched'").orderBy("seq_key").first()["url"]
+    )
+    assert run.invalidate([url]) == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_bloom_run_rejects_invalidate(spark, tmp_path_factory):
